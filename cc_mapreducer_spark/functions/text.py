@@ -49,5 +49,8 @@ def tokens(text: Column) -> Column:
 def anagram_signature(word: Column) -> Column:
     """word -> characters sorted ascending, rejoined (reference ``_map``,
     src/index.js:64-69). Binary string sort == JS code-unit sort on the
-    [a-z] alphabet the tokenizer guarantees, so no UDF is needed."""
-    return F.array_join(F.array_sort(F.split(word, "")), "")
+    [a-z] alphabet the tokenizer guarantees, so no UDF is needed.
+    ``sort_array`` (not the lambda-based ``array_sort``) keeps the sort in
+    whole-stage codegen; both give the same ascending order on the
+    non-null characters ``split`` returns."""
+    return F.array_join(F.sort_array(F.split(word, "")), "")

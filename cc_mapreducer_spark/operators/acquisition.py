@@ -487,8 +487,7 @@ def acquisition_chain_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fetch/ingest: registered-domain blocklists (spam/adult/SEO farms) and
 # path-keyword rules (login/cart/search endpoints produce no training
 # text). Both sides are SMALL (thousands of rows) against a huge URL
-# stream — the textbook broadcast-anti-join, the same shape as the
-# anagram stop-word filter (operators/anagram.py:58). The verdict column
+# stream — the textbook broadcast-anti-join. The verdict column
 # makes the gate auditable: a row is never silently dropped, it is
 # LABELED, and the ingest filters on the label (the pattern GDPR/audit
 # pipelines need).

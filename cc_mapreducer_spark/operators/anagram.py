@@ -12,10 +12,11 @@ lacks. Zero UDFs; every expression is whole-stage-codegen'd.
 
 Scale notes (100 TB): the only shuffle key is `signature`, whose cardinality
 is huge (≈ distinct words) and near-uniform — no skew salting needed. The
-stop-word table is tiny and broadcast (left anti-join), mirroring the
-reference's stop-word broadcast (src/index.js:152) without copying it into
-every task message. AQE coalesces post-shuffle partitions at low SF and
-splits skewed ones at high SF.
+stop-word set is a 63-literal `InSet` predicate fused into the
+scan/tokenize stage: where the reference ships the list inside every
+Pub/Sub message (src/index.js:152), the literals here ride in the
+generated code, with no broadcast job or join. AQE coalesces post-shuffle
+partitions at low SF and splits skewed ones at high SF.
 """
 
 from __future__ import annotations
@@ -47,15 +48,15 @@ def op_filter_minlen(words: DataFrame) -> DataFrame:
 
 
 def op_filter_stopwords(words: DataFrame) -> DataFrame:
-    """filter_stopwords (src/index.js:53) as a broadcast LEFT ANTI join.
+    """filter_stopwords (src/index.js:53) as a `NOT IN` predicate.
 
     The reference ships the stop-word set inside every Pub/Sub message
-    (src/index.js:152) — a manual broadcast. Spark broadcasts the tiny
-    dim table once per executor; the anti-join stays in the scan stage.
+    (src/index.js:152) — a manual broadcast. Catalyst turns the literal
+    list into an `InSet` that is codegen'd into the scan/tokenize stage.
+    A NULL word is dropped (`NULL NOT IN (...)` is NULL, not true), as
+    the oracles' `word NOT IN (...)` drops it.
     """
-    spark = words.sparkSession
-    stop = spark.createDataFrame([(w,) for w in STOP_WORDS], "word string")
-    return words.join(F.broadcast(stop), "word", "left_anti")
+    return words.filter(~F.col("word").isin(list(STOP_WORDS)))
 
 
 def op_map_signature(words: DataFrame) -> DataFrame:
@@ -74,7 +75,7 @@ def op_group_anagrams(pairs: DataFrame, min_group_size: int = 2) -> DataFrame:
     reference's HAVING (src/index.js:111); 1 keeps singleton groups."""
     return (
         pairs.groupBy("signature")
-        .agg(F.array_sort(F.collect_set("word")).alias("words"))
+        .agg(F.sort_array(F.collect_set("word")).alias("words"))
         .filter(F.size("words") >= min_group_size)
     )
 
@@ -174,80 +175,19 @@ FROM words GROUP BY word
 """
 )
 
-# Faithful mode: the reference's apostrophe regex /'/  lacks the g flag
-# (src/index.js:50), so only the FIRST apostrophe per document is removed
-# (joining its neighbors); the rest become word breaks. DuckDB's
-# regexp_replace without the 'g' flag has the same first-match-only
-# semantics, and Spark exposes it via regexp_replace's position overload.
-_TOKENIZE_FAITHFUL_SQL = f"""
-WITH stripped AS (
-    SELECT regexp_replace(lower(text), '''', '') AS t1 FROM documents
-), toks AS (
-    SELECT unnest(string_split(regexp_replace(t1, '[^a-z]+', ' ', 'g'), ' ')) AS word
-    FROM stripped
-), words AS (
-    SELECT word FROM toks
-    WHERE length(word) > 1 AND word NOT IN {stop_words_sql_list()}
-)
-SELECT word, CAST(count(*) AS BIGINT) AS cnt
-FROM words GROUP BY word
-"""
-
-
-def q_tokenize_wordcount_faithful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-faithful reader mode reproducing the reference's
-    first-apostrophe-only quirk (SURVEY §2.2): in a document containing
-    "don't ... can't", the first apostrophe is deleted (-> "dont") and all
-    later ones break words (-> "can", "t"). The sane-mode default
-    (tokenize_wordcount) treats every apostrophe as a break; both modes
-    agree on the driver's apostrophe-free corpus and diverge exactly as
-    the reference does on real text (unit-tested)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # remove ONLY the first apostrophe: prefix before it + remainder after.
-    # (Spark's 4-arg regexp_replace position arg does NOT mean
-    # first-match-only — it replaces all matches from that position.)
-    stripped = F.expr(
-        "concat(substring_index(lower(text), \"'\", 1),"
-        " substring(lower(text), length(substring_index(lower(text), \"'\", 1)) + 2))"
-    )
-    words = (
-        docs.select(
-            F.explode(F.split(F.regexp_replace(stripped, "[^a-z]+", " "), " ")).alias("word")
-        )
-        .filter(F.length("word") > 1)
-    )
-    words = op_filter_stopwords(words)
-    return words.groupBy("word").agg(F.count("*").alias("cnt"))
-
-
 def q_tokenize_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reader stage in isolation (source_read + §2.2 projections/filters),
     aggregated to word counts so the result is small and stable."""
     return word_stream(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
 
 
-_SIGNATURES_SQL = (
-    WORDS_CTE
-    + """
-SELECT DISTINCT word,
-       array_to_string(list_sort(string_split(word, '')), '') AS signature
-FROM words
-"""
-)
-
-
-def q_word_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """map_signature (§2.3) in isolation: distinct word -> signature."""
-    return op_map_signature(word_stream(spark, sf_dir)).select("word", "signature").distinct()
-
-
 # Roster consolidation (round 2): the driver records correctness for at
 # most 50 registered queries (CORRECTNESS_r01 checked exactly the first 50
-# registration-order keys), so the three per-word surfaces above —
-# sane-mode word counts, faithful-mode word counts (first-apostrophe
-# quirk, src/index.js:50), and word->signature (§2.3) — merge into ONE
-# per-word profile. Each component stays an importable function with its
-# own unit tests; the merged key is what the driver hashes.
+# registration-order keys), so three per-word surfaces — sane-mode word
+# counts, faithful-mode word counts (first-apostrophe quirk,
+# src/index.js:50), and word->signature (§2.3) — merge into ONE per-word
+# profile, the registered key. Only the sane-mode word count stays
+# a function of its own (q_tokenize_wordcount).
 _WORD_PROFILE_SQL = f"""
 WITH sane AS (
     {_TOKENIZE_SQL}
@@ -278,7 +218,7 @@ def q_word_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     real text.
 
     Plan shape (round-4 rewrite): ONE scan of documents emits both
-    tokenizations as a tagged token array (mode flag per token), so the
+    tokenizations, each tagged with its mode flag, so the
     full-outer merge of the two modes becomes conditional sums under a
     single word-keyed Exchange — 1 scan + 1 shuffle where the previous
     full-outer-join plan took 2 scans + 3 shuffles. At 100 TB that halves
@@ -293,14 +233,17 @@ def q_word_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         " substring(lower(text), length(substring_index(lower(text), \"'\", 1)) + 2))"
     )
     faithful_toks = F.split(F.regexp_replace(stripped, "[^a-z]+", " "), " ")
-    tag = lambda arr, flag: F.transform(  # noqa: E731
-        arr, lambda w: F.struct(F.lit(flag).alias("sane"), w.alias("word"))
-    )
+    # one (mode flag, token array) row per mode, then one row per token:
+    # two generated Generates, where a per-token `transform` tag would be
+    # an interpreted lambda that keeps the tokenizer out of codegen.
     tagged = docs.select(
         F.explode(
-            F.concat(tag(tokens(F.col("text")), 1), tag(faithful_toks, 0))
+            F.array(
+                F.struct(F.lit(1).alias("sane"), tokens(F.col("text")).alias("toks")),
+                F.struct(F.lit(0).alias("sane"), faithful_toks.alias("toks")),
+            )
         ).alias("t")
-    ).select(F.col("t.sane").alias("sane"), F.col("t.word").alias("word"))
+    ).select(F.col("t.sane").alias("sane"), F.explode("t.toks").alias("word"))
     words = op_filter_stopwords(tagged.filter(F.length("word") > 1))
     return words.groupBy("word").agg(
         F.sum("sane").cast("bigint").alias("cnt_sane"),
@@ -386,9 +329,13 @@ def q_anagram_output_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the HAVING>1 filter passing real groups. Cross-group order is
     unspecified there (JS object iteration), so rows here are an
     unordered set of lines; a single-file sink would be
-    `.coalesce(1).write.text(...)`."""
+    `.coalesce(1).write.text(...)`.
+
+    Planting emits each word and its reversal from one row
+    (`explode(array(word, reverse(word)))`), so the corpus is scanned and
+    tokenized once — the oracle's UNION ALL as a single generated stage."""
     words = word_stream(spark, sf_dir)
-    planted = words.unionAll(words.select(F.reverse("word").alias("word")))
+    planted = words.select(F.explode(F.array("word", F.reverse("word"))).alias("word"))
     groups = op_group_anagrams(op_map_signature(planted))
     return groups.select(
         F.format_string("%s: { %s }", "signature", F.array_join("words", ", ")).alias("line")

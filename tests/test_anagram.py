@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from cc_mapreducer_spark import registry
 from cc_mapreducer_spark.functions.text import STOP_WORDS
 from cc_mapreducer_spark.operators.anagram import (
     op_filter_minlen,
@@ -53,6 +56,33 @@ def test_stopword_anti_join(spark):
     got = sorted(r["word"] for r in words.collect())
     assert got == ["lazy", "quick"]
     assert "the" in STOP_WORDS
+
+
+def test_stopword_filter_null_semantics(spark):
+    # NOT IN drops a NULL word (NULL NOT IN (...) is NULL), as the oracles'
+    # `word NOT IN (...)` does; a left anti-join would have kept it
+    rows = [(None,), ("quick",), ("lazy",)] + [(w,) for w in STOP_WORDS]
+    words = spark.createDataFrame(rows, "word string")
+    got = sorted(r["word"] for r in op_filter_stopwords(words).collect())
+    assert got == ["lazy", "quick"]
+
+
+def test_word_profile_apostrophe_modes(spark, tmp_path):
+    # sane mode breaks at every apostrophe; faithful mode deletes only the
+    # first one per document (src/index.js:50). "can" is a stop word and
+    # the lone "t"s fall to the length filter.
+    pq.write_table(
+        pa.table({"doc_id": [1], "text": ["Don't stop, can't won't"]}),
+        tmp_path / "documents.parquet",
+    )
+    profile = registry.all_queries()["word_profile"](spark, str(tmp_path))
+    got = sorted(tuple(r) for r in profile.collect())
+    assert got == [
+        ("don", 1, 0, "dno"),
+        ("dont", 0, 1, "dnot"),
+        ("stop", 1, 1, "opst"),
+        ("won", 1, 1, "now"),
+    ]
 
 
 @settings(max_examples=20, deadline=None)

@@ -7,6 +7,10 @@ once (its one semantic barrier)."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from cc_mapreducer_spark import registry
 from cc_mapreducer_spark.operators.relational import join_broadcast_dims, order_limit_topk
 from cc_mapreducer_spark.plans.inspect import count_exchanges, executed_plan, formatted_plan
@@ -42,14 +46,33 @@ def test_anagram_single_semantic_shuffle(spark):
     # tokenize -> filters -> signature -> groupBy: exactly ONE hash-keyed
     # Exchange (the reference's shuffler stage). The extra RoundRobin
     # exchange is spread()'s single-file-input widening, a no-op on a real
-    # multi-split table. Stop-word anti-join must broadcast.
+    # multi-split table. The stop-word filter is an InSet predicate in the
+    # scan stage: no broadcast, no join.
     plan = formatted_plan(Q["anagram_groups"](spark, SF_ORACLE))
     hash_exchanges = sum(
         1 for l in plan.splitlines() if "Arguments: hashpartitioning" in l
     )
     assert hash_exchanges == 1
     assert count_exchanges(Q["anagram_groups"](spark, SF_ORACLE)) <= 2
-    assert "BroadcastHashJoin" in plan
+    assert "BroadcastExchange" not in plan
+    assert not re.search(r"\w+Join\b", plan)  # join nodes; not array_join
+    assert "INSET" in plan
+
+
+@pytest.mark.parametrize("name", ["anagram_groups", "word_profile", "anagram_output_lines"])
+def test_anagram_family_fully_generated(spark, name):
+    # no higher-order function left in the hot path: the lambda-based
+    # array_sort (and a transform tag) would run interpreted, outside
+    # whole-stage codegen
+    assert "lambdafunction" not in executed_plan(Q[name](spark, SF_ORACLE))
+
+
+def test_anagram_output_lines_single_tokenize(spark):
+    # reversal planting explodes (word, reverse(word)) off ONE word stream:
+    # no Union and a single tokenizer Generate over the documents scan
+    plan = formatted_plan(Q["anagram_output_lines"](spark, SF_ORACLE))
+    assert "Union" not in plan
+    assert plan.count("Arguments: explode(split(regexp_replace(lower(text") == 1
 
 
 def test_q1_partial_aggregation(spark):
